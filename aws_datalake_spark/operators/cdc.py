@@ -62,8 +62,9 @@ def apply_changes(
     """Apply a change set to a snapshot: rows matching ``delete_keys``
     or an upsert key are dropped, then ``upserts`` (full rows) are
     appended — the parquet-era form of ``MERGE WHEN MATCHED UPDATE /
-    WHEN NOT MATCHED INSERT / WHEN MATCHED DELETE``; with Delta
-    present this becomes one DeltaTable.merge (sources/delta_io.py).
+    WHEN NOT MATCHED INSERT / WHEN MATCHED DELETE``; on a
+    transaction-log table the same change set is one
+    ``txn_table.merge_upsert(..., anti_keys=...)`` commit.
 
     SCALE: one left_anti join keyed on the natural key. The removal
     key set (upsert keys ∪ delete keys) is change-sized, so it

@@ -8,12 +8,17 @@ ZonePaths directories; each stage is a handful of narrow Spark jobs,
 and the per-row DynamoDB RPC of the reference
 (transformation.py:407) is two set-based operations.
 
-All state lives in tables (parquet locally, Delta in production via
-sources/delta_io.py) — reruns are idempotent per zone overwrite.
+The transformation state and every warehouse table are
+transaction-log tables (sources/txn_table.py): a write lands as new
+files plus one log commit, so a plan still reading the previous
+snapshot stays valid and nothing is staged and copied. Zone writes
+are idempotent overwrites; a batch load reruns from the last
+published versions.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,8 +31,13 @@ from aws_datalake_spark.operators.scalar import (
     add_generic_padding,
     project_final,
 )
-from aws_datalake_spark.operators.scd2 import scd2_merge
 from aws_datalake_spark.operators.state_delta import compute_deltas, upsert_state
+from aws_datalake_spark.sources import txn_table as tt
+from aws_datalake_spark.sources.publish import (
+    current_manifest,
+    pinned_version,
+    publish_txn,
+)
 from aws_datalake_spark.sources.readers import read_json_docs, read_pipe_staging
 from aws_datalake_spark.sources.writers import cast_void_to_string, write_pipe_csv
 
@@ -75,79 +85,35 @@ def run_transformation(
     main = add_generic_padding(main, n=job.generic_padding)
     main = add_audit_ts(main, historical_date=job.historical_date)
 
+    state = None
     if job.metric_cols:
-        if state_path is not None:
-            try:
-                state = spark.read.parquet(state_path)
-            except Exception:
-                state = None
-        else:
-            state = None
+        if state_path is not None and tt.is_txn_table(state_path):
+            state = tt.read(spark, state_path)
         main = compute_deltas(main, state, job.key_cols, job.metric_cols)
-        main = cast_void_to_string(
-            project_final(main, [c for c in job.final_columns if c in main.columns])
+    main = cast_void_to_string(
+        project_final(main, [c for c in job.final_columns if c in main.columns])
+    )
+    write_pipe_csv(main, out_path)
+    if job.metric_cols and state_path is not None:
+        # today's cumulative per key (upsert_state with no prior state),
+        # committed once: the merge keeps state rows of absent keys
+        fresh = upsert_state(
+            raw.select(*[r.to_column(raw) for r in job.rules]).select(
+                *job.key_cols, *job.metric_cols
+            ),
+            None,
+            job.key_cols,
+            job.metric_cols,
         )
-        write_pipe_csv(main, out_path)
-        if state_path is not None:
-            # Both consumers of the OLD state (deltas above, upsert
-            # below) must materialize before the state table is
-            # overwritten — lazy plans hold file references, and
-            # parquet has no transaction log to protect readers
-            # (Delta MERGE replaces this stage-then-swap wholesale
-            # in production, sources/delta_io.py).
-            new_state = upsert_state(
-                raw.select(
-                    *[r.to_column(raw) for r in job.rules],
-                ).select(*job.key_cols, *job.metric_cols),
-                state,
-                job.key_cols,
-                job.metric_cols,
-            )
-            tmp = state_path.rstrip("/") + "__stage"
-            new_state.write.mode("overwrite").parquet(tmp)
-            spark.read.parquet(tmp).write.mode("overwrite").parquet(state_path)
-    else:
-        main = cast_void_to_string(
-            project_final(main, [c for c in job.final_columns if c in main.columns])
-        )
-        write_pipe_csv(main, out_path)
+        if state is None:
+            tt.write(fresh, state_path)
+        else:
+            tt.merge_upsert(spark, state_path, fresh, keys=job.key_cols)
 
     outputs["main"] = spark.read.option("sep", "|").option("header", True).schema(
         main.schema
     ).csv(out_path)
     return outputs
-
-
-def run_loading(
-    spark: SparkSession,
-    staging_path: str,
-    target_path: str,
-    keys: list[str],
-    staging_schema: str,
-    columnwise_keys: bool = False,
-) -> DataFrame:
-    """§3.3 loading stage: pipe-CSV staging read (the COPY twin,
-    loading.py:26-30) → SCD2 close-out + unconditional re-insert
-    (loading.py:32-130) → target overwrite. Returns the post-merge
-    table."""
-    staging = read_pipe_staging(spark, staging_path, schema=staging_schema)
-    try:
-        target = spark.read.parquet(target_path)
-        first_load = False
-    except Exception:
-        first_load = True
-
-    if first_load:
-        merged = staging.withColumn("actv_flg", F.lit("Y")).withColumn(
-            "record_to", F.lit(None).cast("timestamp")
-        )
-    else:
-        merged = scd2_merge(target, staging, keys, columnwise_keys=columnwise_keys)
-
-    tmp = target_path.rstrip("/") + "__stage"
-    merged.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(target_path)
-    return spark.read.parquet(target_path)
 
 
 def run_masking(
@@ -179,7 +145,6 @@ class EntityLoad:
     staging_path: str
     keys: list[str]
     staging_schema: str
-    columnwise_keys: bool = False
     # fixed close-out timestamp ('YYYY-MM-DD HH:MM:SS'); None = now().
     # Batch loads that must be replayable (and oracle-checkable) pin it.
     close_ts: str | None = None
@@ -192,42 +157,42 @@ def run_batch_load(
     entities: dict[str, EntityLoad],
 ) -> int:
     """§3.3 full-batch loading with the reference's single-commit
-    visibility (loading.py:2137): every entity's SCD2 merge is staged
-    under ``batch=<id>`` paths (invisible), then ONE manifest flip
-    publishes the whole batch — readers see all 19 entities' new
-    versions or none. Returns the manifest version.
+    visibility (loading.py:2137): each entity's SCD2 merge is one
+    commit to its own log at ``<root>/<entity>`` (a first load is a
+    plain write), then ONE ``publish_txn`` pins every entity's new
+    version — readers see all entities' new versions or none.
+    Returns the manifest version.
 
-    Each entity merges against its currently-PUBLISHED version, so a
-    crashed half-staged batch can simply be re-run: staging writes
-    are per-batch paths (idempotent overwrite), and nothing was
-    visible.
+    Readers only see pinned versions, so a crashed batch left nothing
+    visible. Its rerun over the same staging first restores every
+    entity whose log moved past its pin (a first load overwrites), so
+    each merge starts from the published state and the result equals
+    one clean run — the logs and the manifest are the only record, so
+    ``batch_id`` is a label the load does not store.
     """
-    from aws_datalake_spark.sources.publish import (
-        publish,
-        read_published,
-        stage_table,
-    )
-
-    staged: dict[str, str] = {}
+    pins = current_manifest(root)["tables"]
+    versions: dict[str, int] = {}
     for name, cfg in entities.items():
+        path = os.path.join(root, name)
         staging = read_pipe_staging(spark, cfg.staging_path, schema=cfg.staging_schema)
-        try:
-            target = read_published(spark, root, name)
-            merged = scd2_merge(
-                target,
-                staging,
-                cfg.keys,
-                close_ts=(
-                    F.lit(cfg.close_ts).cast("timestamp")
-                    if cfg.close_ts is not None
-                    else None
+        if name not in pins:
+            versions[name] = tt.write(
+                staging.withColumn("actv_flg", F.lit("Y")).withColumn(
+                    "record_to", F.lit(None).cast("timestamp")
                 ),
-                columnwise_keys=cfg.columnwise_keys,
+                path,
+                mode="overwrite",
             )
-        except KeyError:
-            merged = staging.withColumn("actv_flg", F.lit("Y")).withColumn(
-                "record_to", F.lit(None).cast("timestamp")
-            )
-        stage_table(merged, root, name, batch_id)
-        staged[name] = batch_id
-    return publish(root, staged)
+            continue
+        pinned = pinned_version(pins[name])
+        if tt.snapshot(path)["version"] > pinned:
+            tt.restore(path, pinned)
+        close_ts = (
+            F.lit(cfg.close_ts).cast("timestamp")
+            if cfg.close_ts is not None
+            else F.date_trunc("second", F.current_timestamp())
+        )
+        versions[name] = tt.scd2_merge_txn(
+            spark, path, staging, cfg.keys, close_ts=close_ts
+        )["version"]
+    return publish_txn(root, versions)

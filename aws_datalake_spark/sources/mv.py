@@ -303,10 +303,7 @@ def mv_refresh(spark: SparkSession, mv_root: str) -> dict:
     if len(group_cols) == 1 and stats_row["lo_0"] is not None and not isinstance(
         stats_row["lo_0"], (list, dict)
     ):
-        lo, hi = stats_row["lo_0"], stats_row["hi_0"]
-        lo = lo.isoformat() if hasattr(lo, "isoformat") else lo
-        hi = hi.isoformat() if hasattr(hi, "isoformat") else hi
-        prune = {group_cols[0]: (lo, hi)}
+        prune = {group_cols[0]: key_bounds[group_cols[0]]}
     cur = tt.read(spark, src_root, prune=prune)
     from aws_datalake_spark.operators.dedup_cluster import _truncate
 

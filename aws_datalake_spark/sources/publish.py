@@ -3,29 +3,29 @@
 The reference loads 19+ warehouse tables and makes them ALL visible
 with one ``con.commit()`` at the end of the run
 (`/root/reference/loading.py:2137`) — readers never see half a batch.
-Parquet (and Delta) give per-TABLE atomicity only; SURVEY.md §4 flags
-the cross-table equivalent as the one orchestration-level custom
-piece. This module is that piece:
+A transaction log (``txn_table``) gives per-TABLE atomicity only;
+SURVEY.md §4 flags the cross-table equivalent as the one
+orchestration-level custom piece. This module is that piece:
 
-* writers stage every table under ``<root>/<table>/batch=<id>/`` —
-  invisible to readers, who never list table directories directly;
-* ``publish()`` flips ONE manifest file (write-temp + atomic rename)
-  mapping every table to its current batch id. The flip is the
-  commit point: before it, readers see the old batch of every table;
-  after it, the new batch of every table. There is no intermediate
-  state, no matter how many tables the batch touched or where it
-  crashed;
-* ``read_published()`` resolves through the manifest, so partition
-  pruning / pushdown work unchanged on the resolved path;
+* writers commit each table's load to its own log at
+  ``<root>/<table>`` — readers never see those versions, because
+  they resolve tables through the manifest, not the log head;
+* ``publish_txn()`` flips ONE manifest file (write-temp + atomic
+  rename) pinning every table to a log version (``txn:v<N>``). The
+  flip is the commit point: before it, readers see the old version
+  of every table; after it, the new version of every table. There
+  is no intermediate state, no matter how many tables the batch
+  touched or where it crashed;
+* ``read_published()`` resolves through the manifest to a
+  version-pinned ``txn_table.read``;
 * previous manifests are retained (``_manifests/v<N>.json``) —
   rollback is re-publishing an old version, and time-travel reads
   are ``read_published(..., version=N)``.
 
 On a real object store the same design holds: single-key PUTs are
 atomic on S3/GCS, so the manifest flip stays the commit point (the
-rename becomes a PUT); staged batch prefixes are cleaned by lifecycle
-policy. This is the same commit discipline Delta/Iceberg use for one
-table, applied across a SET of tables.
+rename becomes a PUT). This is the same commit discipline Delta/Iceberg
+use for one table, applied across a SET of tables.
 """
 
 from __future__ import annotations
@@ -37,16 +37,11 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from aws_datalake_spark.sources import txn_table as tt
+
 _MANIFEST_DIR = "_manifests"
 _CURRENT = "_CURRENT.json"
-
-
-def stage_table(df: DataFrame, root: str, table: str, batch_id: str) -> str:
-    """Write one table's batch under the staging layout (invisible
-    until published). Returns the staged path."""
-    path = os.path.join(root, table, f"batch={batch_id}")
-    df.write.mode("overwrite").parquet(path)
-    return path
+_TXN_PIN = "txn:v"
 
 
 def _manifest_path(root: str, version: int) -> str:
@@ -64,14 +59,16 @@ def current_manifest(root: str) -> dict:
 
 
 def publish(root: str, tables: dict[str, str]) -> int:
-    """Atomically make ``{table: batch_id}`` the visible state for
-    EVERY listed table at once; unlisted tables keep their current
-    batch. Returns the new manifest version.
+    """Atomically make ``{table: pin}`` the visible state for EVERY
+    listed table at once; unlisted tables keep their current pin.
+    Returns the new manifest version. Pins are opaque here;
+    ``publish_txn`` writes the ``txn:v<N>`` pins ``read_published``
+    resolves.
 
     The commit point is one ``os.replace`` of the manifest file —
     POSIX-atomic, so a concurrent reader sees either the old or the
     new manifest, never a torn one, and a crash before the replace
-    publishes nothing (staged files simply sit invisible).
+    publishes nothing (committed log versions simply sit unpinned).
 
     Concurrent WRITERS are serialized optimistically: the retained
     ``v<N+1>.json`` is created with ``O_EXCL``, so two publishers that
@@ -129,7 +126,7 @@ def rollback(root: str, version: int) -> int:
 def read_published(
     spark: SparkSession, root: str, table: str, version: int | None = None
 ) -> DataFrame:
-    """Read a table at the currently-published batch (or at a
+    """Read a table at its currently-published log version (or at a
     retained manifest ``version`` — cross-table-consistent time
     travel)."""
     if version is None:
@@ -138,16 +135,16 @@ def read_published(
         with open(_manifest_path(root, version)) as f:
             manifest = json.load(f)
     if table not in manifest["tables"]:
-        raise KeyError(f"table {table!r} has no published batch (manifest v{manifest['version']})")
-    batch = manifest["tables"][table]
-    if isinstance(batch, str) and batch.startswith("txn:v"):
-        # version-pinned transaction-log table (publish_txn)
-        from aws_datalake_spark.sources import txn_table as tt
+        raise KeyError(f"table {table!r} has no published version (manifest v{manifest['version']})")
+    return tt.read(spark, os.path.join(root, table),
+                   version=pinned_version(manifest["tables"][table]))
 
-        return tt.read(
-            spark, os.path.join(root, table), version=int(batch[5:])
-        )
-    return spark.read.parquet(os.path.join(root, table, f"batch={batch}"))
+
+def pinned_version(pin: str) -> int:
+    """The log version a ``txn:v<N>`` manifest pin names."""
+    if not pin.startswith(_TXN_PIN):
+        raise ValueError(f"not a transaction-log pin: {pin!r}")
+    return int(pin[len(_TXN_PIN):])
 
 
 def publish_txn(root: str, versions: dict[str, int | None]) -> int:
@@ -161,13 +158,9 @@ def publish_txn(root: str, versions: dict[str, int | None]) -> int:
     new version visible together; ``read_published(...,
     version=<manifest>)`` is cross-table-consistent time travel.
     Tables live at ``<root>/<name>`` as txn tables."""
-    import os as _os
-
-    from aws_datalake_spark.sources import txn_table as tt
-
     resolved: dict[str, str] = {}
     for name, v in versions.items():
-        cur = tt.snapshot(_os.path.join(root, name))["version"]
+        cur = tt.snapshot(os.path.join(root, name))["version"]
         if v is None:
             v = cur
         elif v > cur:
@@ -175,5 +168,5 @@ def publish_txn(root: str, versions: dict[str, int | None]) -> int:
                 f"publish_txn: {name!r} has no committed version {v} "
                 f"(latest is {cur})"
             )
-        resolved[name] = f"txn:v{v}"
+        resolved[name] = f"{_TXN_PIN}{v}"
     return publish(root, resolved)

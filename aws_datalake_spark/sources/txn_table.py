@@ -16,8 +16,7 @@ Why this matters at 100 TB, not just for ACID hygiene:
   stats in its `add` action. A keyed upsert rewrites ONLY files
   whose key range intersects the updates' key range; a 100 TB table
   taking a 1 GB CDC batch touches a handful of files instead of the
-  full-table rewrite `delta_io.upsert`'s flat-parquet fallback is
-  forced into.
+  full-table rewrite flat parquet is forced into.
 * **Stats-skipped scans.** `read(..., prune={col: (lo, hi)})` drops
   files whose stats cannot satisfy the range before Spark ever sees
   them — the same data-skipping Delta does from its log.
@@ -43,6 +42,20 @@ Reference parity: the reference stages warehouse loads and flips
 visibility in one commit (`/root/reference/loading.py:2137`); this
 module is the single-table half of that discipline (cross-table is
 `publish.py`).
+
+Production mapping (the same call sites on Delta Lake with
+delta-spark on the classpath):
+
+* SCD2 close-out+insert (`scd2_merge_txn`) → one ``DeltaTable.merge``
+  transaction (whenMatchedUpdate set actv_flg='N' + insert-all),
+  file-pruned by the log's min/max stats.
+* State upsert (`merge_upsert`) → ``merge.whenMatchedUpdateAll.
+  whenNotMatchedInsertAll`` keyed (_id, reference_id).
+* Drift (`write(..., merge_schema=True)`) → ``option("mergeSchema",
+  "true")`` on append — the reference itself uses exactly this
+  (/root/reference/great_expectations.py:337-338).
+* `compact` / `zorder_compact` / `vacuum` / `restore` → ``OPTIMIZE``,
+  ``OPTIMIZE ... ZORDER BY``, ``VACUUM``, ``RESTORE``.
 """
 
 from __future__ import annotations
@@ -445,10 +458,14 @@ def write(df: DataFrame, root: str, mode: str = "append",
 
 def _stats_overlap(add: dict, col: str, lo, hi) -> bool:
     """May this file contain a value of ``col`` in [lo, hi]? Missing
-    stats ⇒ conservatively yes."""
+    stats ⇒ conservatively yes. Temporal probes (``date`` from a
+    ``collect()``) compare as ISO strings, the form ``_harvest_stats``
+    stores them in."""
     st = add.get("stats", {}).get(col)
     if st is None:
         return True
+    lo = lo.isoformat() if hasattr(lo, "isoformat") else lo
+    hi = hi.isoformat() if hasattr(hi, "isoformat") else hi
     if lo is not None and st["max"] < lo:
         return False
     if hi is not None and st["min"] > hi:
@@ -737,11 +754,10 @@ def merge_upsert(
     ``bounds`` (optional, ``{key: (lo, hi)}`` over the removal set)
     skips the bounds-collect job when the caller already knows them.
 
-    This is the scale gap called out in delta_io.upsert's fallback:
-    flat parquet must rewrite the world, a logged table rewrites
-    O(files containing the keys). Serializable via OCC — a concurrent
-    commit between our snapshot and our log create raises
-    ConflictError and the merge re-derives its read set.
+    Flat parquet must rewrite the world for an upsert; a logged
+    table rewrites O(files containing the keys). Serializable via
+    OCC — a concurrent commit between our snapshot and our log create
+    raises ConflictError and the merge re-derives its read set.
     """
     _enforce_constraints(updates, root)
     if _has_column_ops(root):
@@ -1269,16 +1285,12 @@ def read_partitioned(
                         tf, hi
                     ):
                         return False
-        # footer-stat pruning on top; timestamps are logged as ISO
-        # strings, so normalize datetime literals before comparing
-        def _s(v):
-            return v.isoformat() if hasattr(v, "isoformat") else v
-
+        # footer-stat pruning on top
         for col, v in eq.items():
-            if not _stats_overlap(a, col, _s(v), _s(v)):
+            if not _stats_overlap(a, col, v, v):
                 return False
         for col, (lo, hi) in ranges.items():
-            if not _stats_overlap(a, col, _s(lo), _s(hi)):
+            if not _stats_overlap(a, col, lo, hi):
                 return False
         return True
 

@@ -22,8 +22,7 @@ Semantics twin: streaming/stateful.py (applyInPandasWithState) and
 the batch join form; equality across the three is pinned in
 tests/test_streaming.py.
 
-Environment gate (recorded like the delta-spark gate in
-sources/delta_io.py): transformWithState's python↔JVM state protocol
+Environment gate: transformWithState's python↔JVM state protocol
 rides protobuf, and this harness image ships no ``google.protobuf``
 (pip installs are off) — so the runtime tests skip here and run
 wherever protobuf exists. The module itself imports and builds the

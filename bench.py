@@ -3,8 +3,12 @@
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Each query is materialized via the noop sink so timing covers the full
-distributed plan (scan → shuffle → agg) without driver collect cost.
+Each timed sample covers building the query's DataFrame — including the
+Spark jobs some builders run eagerly (lineage-cut checkpoints, driver
+collects) — plus one noop-sink run of the finished plan. The noop sink
+skips the final driver collect; it does not by itself cover a query's
+full distributed work, which for build-bound queries happens while the
+DataFrame is built (perfbench's traced runs split the two).
 """
 
 from __future__ import annotations

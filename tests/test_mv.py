@@ -198,3 +198,40 @@ def test_mv_vanished_group_with_quoted_string_key(tmp_path, spark):
     assert r["gone_groups"] == 1
     got = mv.mv_read(spark, root)
     assert got.count() == 1 and got.first()["g"] == "plain"
+
+
+def _dated_view(tmp_path, spark):
+    """A view grouped on a DATE column over two files with disjoint
+    date ranges: footer stats hold the bounds as ISO strings."""
+    import datetime
+
+    src = str(tmp_path / "src")
+    root = str(tmp_path / "mv")
+    day = lambda i: datetime.date(2024, 1, 1) + datetime.timedelta(days=i)  # noqa: E731
+    for lo in (0, 100):
+        tt.write(spark.createDataFrame(
+            [Row(k=i, g=day(lo + i % 5), v=float(i)) for i in range(lo, lo + 50)]
+        ).coalesce(1), src)
+    mv.mv_create(spark, src, root, ["g"],
+                 {"n": ("count",), "sv": ("sum", "v"), "mx": ("max", "v")})
+    return src, root
+
+
+def test_mv_date_keyed_partial_delete(tmp_path, spark):
+    src, root = _dated_view(tmp_path, spark)
+    tt.delete_where_dv(spark, src, "k = 3")  # group 2024-01-04 survives
+    r = mv.mv_refresh(spark, root)
+    assert r["mode"] == "incremental"
+    assert r["dirty_groups"] == 1 and r["gone_groups"] == 0
+    assert _same(mv.mv_read(spark, root), _expected(spark, src))
+
+
+def test_mv_date_keyed_all_dirty_groups_vanish(tmp_path, spark):
+    src, root = _dated_view(tmp_path, spark)
+    tt.delete_where_dv(spark, src, "g = DATE'2024-04-11'")  # day 101
+    r = mv.mv_refresh(spark, root)
+    assert r["mode"] == "incremental"
+    assert r["dirty_groups"] == 1 and r["gone_groups"] == 1
+    got = mv.mv_read(spark, root)
+    assert got.count() == 9
+    assert _same(got, _expected(spark, src))

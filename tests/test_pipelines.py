@@ -3,12 +3,24 @@ warehouse table over two daily runs (SURVEY.md §3 parity)."""
 
 from __future__ import annotations
 
+import datetime
 import json
+import os
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from aws_datalake_spark.operators.rules import Rule
-from aws_datalake_spark.pipelines import TransformationJob, run_loading, run_transformation
+from aws_datalake_spark.pipelines import (
+    EntityLoad,
+    TransformationJob,
+    run_batch_load,
+    run_transformation,
+)
+from aws_datalake_spark.sources import txn_table as tt
+from aws_datalake_spark.sources.publish import read_published
+from aws_datalake_spark.sources.writers import write_pipe_csv
 
 _DAY1 = [
     {
@@ -76,7 +88,13 @@ def test_two_day_lifecycle(spark, tmp_path):
     state = str(tmp_path / "state")
     zone1 = str(tmp_path / "transformed1")
     zone2 = str(tmp_path / "transformed2")
-    target = str(tmp_path / "warehouse_entity")
+    wh = str(tmp_path / "warehouse")
+
+    def load(batch_id, zone):
+        run_batch_load(spark, wh, batch_id, {
+            "entity": EntityLoad(zone, keys=["_id"], staging_schema=_STG_SCHEMA),
+        })
+        return read_published(spark, wh, "entity")
 
     # --- day 1 transformation: first sight → deltas = raw cumulative
     out1 = run_transformation(spark, raw1, zone1, _JOB, state_path=state)
@@ -86,7 +104,7 @@ def test_two_day_lifecycle(spark, tmp_path):
     assert [r._id for r in out1["locations"].collect()] == [1, 1]
 
     # --- day 1 load: first load → all rows active
-    t1 = run_loading(spark, zone1, target, keys=["_id"], staging_schema=_STG_SCHEMA)
+    t1 = load("d1", zone1)
     assert t1.filter(F.col("actv_flg") == "Y").count() == 2
 
     # --- day 2 transformation: deltas vs stored cumulative
@@ -96,7 +114,7 @@ def test_two_day_lifecycle(spark, tmp_path):
     assert m2[2].impressions == 25 and m2[2].clicks == 4   # 75-50, 9-5
 
     # --- day 2 load: SCD2 close-out + unconditional re-insert
-    t2 = run_loading(spark, zone2, target, keys=["_id"], staging_schema=_STG_SCHEMA)
+    t2 = load("d2", zone2)
     assert t2.count() == 4
     active = {r._id: r for r in t2.filter(F.col("actv_flg") == "Y").collect()}
     assert active[1].entity_name == "alpha2"
@@ -105,8 +123,16 @@ def test_two_day_lifecycle(spark, tmp_path):
     assert all(r.record_to is not None for r in closed.collect())
 
     # state now holds day-2 cumulative
-    st = {r._id: r for r in spark.read.parquet(state).collect()}
+    st = {r._id: r for r in tt.read(spark, state).collect()}
     assert st[1].impressions_value == 160 and st[2].clicks_value == 9
+    # one state version per day, and no staged copy beside the table
+    assert [h["op"] for h in tt.history(state)] == ["append", "merge"]
+    assert sorted(os.listdir(tmp_path)) == [
+        "raw1", "raw2", "state", "transformed1", "transformed2", "warehouse",
+    ]
+    for root in (state, os.path.join(wh, "entity")):
+        rep = tt.fsck(root, verify_stats=True)
+        assert rep["ok"], rep["problems"]
 
 
 def test_masking_zone_copy(spark, tmp_path):
@@ -168,6 +194,68 @@ def test_batch_load_single_commit_scd2_across_entities(spark, tmp_path):
     assert cr.filter("actv_flg = 'Y'").count() == 2
     # time travel: at v1 creative had one row
     assert read_published(spark, root, "creative", version=1).count() == 1
+
+
+_BATCH_SCHEMA = "k long, v string, insrt_ts timestamp"
+
+
+def _stage_batch(spark, tmp_path, day, rows):
+    """Pipe-CSV staging per entity plus its EntityLoad, close-out
+    time pinned so two loads of the same batch compare exactly."""
+    loads = {}
+    for name, data in rows.items():
+        p = str(tmp_path / f"stg_{name}_{day}")
+        write_pipe_csv(spark.createDataFrame(data, _BATCH_SCHEMA).coalesce(1), p)
+        loads[name] = EntityLoad(staging_path=p, keys=["k"], staging_schema=_BATCH_SCHEMA,
+                                 close_ts=f"{day} 00:00:01")
+    return loads
+
+
+def _published(spark, root, version=None):
+    return {
+        name: sorted(tuple(r) for r in read_published(spark, root, name, version).collect())
+        for name in ("ad_unit", "creative")
+    }
+
+
+def test_batch_load_rerun_after_crash_equals_clean_run(spark, tmp_path):
+    """A batch that crashed after its first entity's merge commit is
+    invisible, and rerunning the same batch_id restores that entity
+    to its published version first — the end state equals one clean
+    run, with every log consistent."""
+    t1, t2 = datetime.datetime(2024, 1, 1), datetime.datetime(2024, 1, 2)
+    day1 = {"ad_unit": [(1, "a", t1), (2, "b", t1)], "creative": [(7, "x", t1)]}
+    day2 = {"ad_unit": [(1, "a2", t2), (3, "c", t2)], "creative": [(7, "x2", t2)]}
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    loads1 = _stage_batch(spark, tmp_path, "2024-01-01", day1)
+    loads2 = _stage_batch(spark, tmp_path, "2024-01-02", day2)
+    run_batch_load(spark, clean, "d1", loads1)
+    run_batch_load(spark, clean, "d2", loads2)
+
+    def crash(batch_id, loads):
+        missing = dict(loads, creative=EntityLoad(
+            staging_path=str(tmp_path / "never_written"), keys=["k"],
+            staging_schema=_BATCH_SCHEMA,
+        ))
+        with pytest.raises(AnalysisException):
+            run_batch_load(spark, crashed, batch_id, missing)
+
+    crash("d1", loads1)  # a crashed first load is overwritten on rerun
+    run_batch_load(spark, crashed, "d1", loads1)
+    crash("d2", loads2)
+    # ad_unit's merge is committed to its log but not published
+    assert tt.snapshot(os.path.join(crashed, "ad_unit"))["version"] == 3
+    assert _published(spark, crashed) == _published(spark, clean, version=1)
+
+    v = run_batch_load(spark, crashed, "d2", loads2)
+    assert v == 2
+    assert _published(spark, crashed) == _published(spark, clean)
+    active = [r for r in _published(spark, crashed)["ad_unit"] if r[3] == "Y"]
+    assert sorted(r[1] for r in active) == ["a2", "b", "c"]
+    for root in (clean, crashed):
+        for name in ("ad_unit", "creative"):
+            rep = tt.fsck(os.path.join(root, name), verify_stats=True)
+            assert rep["ok"], rep["problems"]
 
 
 def test_entity_end_to_end_scd2_history(spark):

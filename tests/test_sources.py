@@ -109,111 +109,6 @@ def test_paginated_api_datasource(spark):
     assert sorted(r.id for r in keyed.collect()) == [1, 5, 7]
 
 
-def test_delta_io_upsert_parquet_fallback(spark, tmp_path):
-    from aws_datalake_spark.sources.delta_io import read_table, upsert, write_table
-
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    write_table(base, path)
-    upd = spark.createDataFrame([(2, "B"), (3, "c")], "id long, v string")
-    upsert(spark, path, upd, ["id"])
-    out = {r.id: r.v for r in read_table(spark, path).collect()}
-    assert out == {1: "a", 2: "B", 3: "c"}
-
-
-def test_delta_io_dual_path_equivalence(spark, tmp_path):
-    """VERDICT r02 item 5: the delta_io surface must behave
-    identically whichever backend serves it under HAVE_DELTA=False —
-    flat parquet (stage-and-swap upsert) vs the native transaction
-    log (file-pruned MERGE). A delta-spark jar drop-in then only
-    changes WHICH branch runs, never the results, so vendoring the
-    jar is a config flip. Same op sequence on both; full-table
-    compare after every step."""
-    from aws_datalake_spark.sources import txn_table as tt
-    from aws_datalake_spark.sources.delta_io import HAVE_DELTA, read_table, upsert, write_table
-
-    assert not HAVE_DELTA  # harness image ships parquet only
-
-    flat = str(tmp_path / "flat")
-    logd = str(tmp_path / "logged")
-    base = spark.createDataFrame(
-        [(i, f"v{i}", i * 10) for i in range(50)], "k long, v string, x long"
-    )
-    write_table(base, flat)
-    tt.write(base, logd, mode="overwrite")
-    assert tt.is_txn_table(logd) and not tt.is_txn_table(flat)
-
-    def rows(path):
-        df = read_table(spark, path) if not tt.is_txn_table(path) else tt.read(spark, path)
-        return sorted((r.k, r.v, r.x) for r in df.select("k", "v", "x").collect())
-
-    assert rows(flat) == rows(logd)
-    # updates hit existing keys, inserts add new ones — both branches
-    # of delta_io.upsert (anti-join rewrite vs log-pruned MERGE)
-    upd = spark.createDataFrame(
-        [(7, "V7", 700), (13, "V13", 1300), (99, "new", 990)],
-        "k long, v string, x long",
-    )
-    upsert(spark, flat, upd, ["k"])
-    upsert(spark, logd, upd, ["k"])
-    got = rows(flat)
-    assert got == rows(logd)
-    assert (7, "V7", 700) in got and (99, "new", 990) in got and len(got) == 51
-    # second round: pure update, pure insert, and an untouched key
-    upd2 = spark.createDataFrame([(99, "NEW", 991), (100, "tail", 0)], "k long, v string, x long")
-    upsert(spark, flat, upd2, ["k"])
-    upsert(spark, logd, upd2, ["k"])
-    assert rows(flat) == rows(logd) and len(rows(flat)) == 52
-
-
-def test_compaction_reduces_files(spark, tmp_path):
-    from aws_datalake_spark.sources.compaction import compact
-
-    path = str(tmp_path / "many")
-    spark.range(10000).repartition(64).write.parquet(path)
-    import glob
-
-    before = len(glob.glob(f"{path}/part-*"))
-    compact(spark, path, target_file_mb=128, sort_cols=["id"])
-    after = len(glob.glob(f"{path}/part-*"))
-    assert before == 64 and after <= 2
-    assert spark.read.parquet(path).count() == 10000
-
-
-def test_clustered_write_layout(spark, tmp_path):
-    from aws_datalake_spark.sources.compaction import clustered_write
-
-    df = spark.createDataFrame(
-        [(i, "a" if i % 2 else "b", i * 10) for i in range(100)],
-        "id long, k string, v long",
-    )
-    path = str(tmp_path / "clustered")
-    clustered_write(df, path, partition_cols=["k"], cluster_cols=["id"])
-    import glob, os
-
-    assert os.path.isdir(f"{path}/k=a") and os.path.isdir(f"{path}/k=b")
-    # one writer task per partition value -> one file each
-    assert len(glob.glob(f"{path}/k=a/part-*")) == 1
-    assert spark.read.parquet(path).filter("k = 'a'").count() == 50
-
-
-def test_zorder_key_locality(spark):
-    from aws_datalake_spark.sources.compaction import zorder_key
-
-    df = spark.createDataFrame(
-        [(x, y) for x in range(8) for y in range(8)], "x long, y long"
-    ).select("x", "y", zorder_key("x", "y", bits=3).alias("z"))
-    rows = {(r.x, r.y): r.z for r in df.collect()}
-    # bijective over the grid
-    assert len(set(rows.values())) == 64
-    # interleave identity checks: (1,0)->1, (0,1)->2, (1,1)->3, (2,2)->12
-    assert rows[(1, 0)] == 1 and rows[(0, 1)] == 2
-    assert rows[(1, 1)] == 3 and rows[(2, 2)] == 12
-    # locality: quadrant [0,4)x[0,4) occupies exactly keys [0,16)
-    quad = [z for (x, y), z in rows.items() if x < 4 and y < 4]
-    assert max(quad) < 16 and len(quad) == 16
-
-
 def test_orc_roundtrip_identity(spark, tmp_path):
     from aws_datalake_spark.sources.readers import read_orc
     from aws_datalake_spark.sources.writers import write_orc
@@ -245,36 +140,37 @@ def test_permissive_csv_captures_corrupt_records(spark, tmp_path):
 
 
 def test_publish_all_or_nothing_across_tables(spark, tmp_path):
+    from aws_datalake_spark.sources import txn_table as tt
     from aws_datalake_spark.sources.publish import (
         current_manifest,
-        publish,
+        publish_txn,
         read_published,
         rollback,
-        stage_table,
     )
 
     root = str(tmp_path / "lake")
+    ta, tb = os.path.join(root, "ta"), os.path.join(root, "tb")
     a1 = spark.createDataFrame([(1, "a")], "id long, v string")
     b1 = spark.createDataFrame([(10, "x")], "id long, v string")
-    stage_table(a1, root, "ta", "b1")
-    stage_table(b1, root, "tb", "b1")
+    tt.write(a1, ta)
+    tt.write(b1, tb)
     # nothing visible before the first publish
     assert current_manifest(root)["tables"] == {}
-    v1 = publish(root, {"ta": "b1", "tb": "b1"})
+    v1 = publish_txn(root, {"ta": None, "tb": None})
     assert read_published(spark, root, "ta").collect() == a1.collect()
     assert read_published(spark, root, "tb").collect() == b1.collect()
 
-    # stage batch 2 for BOTH tables, publish NOTHING yet: readers
-    # still see batch 1 of both (no intermediate state)
+    # commit version 2 of BOTH tables, publish NOTHING yet: readers
+    # still see version 1 of both (no intermediate state)
     a2 = spark.createDataFrame([(2, "a2")], "id long, v string")
     b2 = spark.createDataFrame([(20, "x2")], "id long, v string")
-    stage_table(a2, root, "ta", "b2")
-    stage_table(b2, root, "tb", "b2")
+    tt.write(a2, ta, mode="overwrite")
+    tt.write(b2, tb, mode="overwrite")
     assert read_published(spark, root, "ta").collect() == a1.collect()
     assert read_published(spark, root, "tb").collect() == b1.collect()
 
     # one flip makes both visible together
-    v2 = publish(root, {"ta": "b2", "tb": "b2"})
+    v2 = publish_txn(root, {"ta": None, "tb": None})
     assert read_published(spark, root, "ta").collect() == a2.collect()
     assert read_published(spark, root, "tb").collect() == b2.collect()
 
@@ -288,16 +184,17 @@ def test_publish_all_or_nothing_across_tables(spark, tmp_path):
 
 
 def test_publish_partial_batch_crash_leaves_readers_unaffected(spark, tmp_path):
-    from aws_datalake_spark.sources.publish import publish, read_published, stage_table
+    from aws_datalake_spark.sources import txn_table as tt
+    from aws_datalake_spark.sources.publish import publish_txn, read_published
 
     root = str(tmp_path / "lake2")
     a1 = spark.createDataFrame([(1,)], "id long")
     b1 = spark.createDataFrame([(2,)], "id long")
-    stage_table(a1, root, "ta", "b1")
-    stage_table(b1, root, "tb", "b1")
-    publish(root, {"ta": "b1", "tb": "b1"})
-    # simulated crash mid-batch: only ta's batch 2 got staged, no publish
-    stage_table(spark.createDataFrame([(9,)], "id long"), root, "ta", "b2")
+    tt.write(a1, os.path.join(root, "ta"))
+    tt.write(b1, os.path.join(root, "tb"))
+    publish_txn(root, {"ta": None, "tb": None})
+    # simulated crash mid-batch: only ta's version 2 got committed, no publish
+    tt.write(spark.createDataFrame([(9,)], "id long"), os.path.join(root, "ta"))
     assert read_published(spark, root, "ta").collect() == a1.collect()
     assert read_published(spark, root, "tb").collect() == b1.collect()
 

@@ -614,8 +614,7 @@ def test_snapshot_enrich_sink_sees_dim_updates_per_batch(spark, tmp_path):
 def _have_protobuf() -> bool:
     """transformWithState's python<->JVM state protocol is protobuf;
     the harness image ships no google.protobuf (and pip installs are
-    off), so the tws tests gate on it — same convention as the
-    delta-spark gate in sources/delta_io.py."""
+    off), so the tws tests gate on it."""
     try:
         from google.protobuf import descriptor  # noqa: F401
 

@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import Row, functions as F
 
-from aws_datalake_spark.sources import delta_io, txn_table as tt
+from aws_datalake_spark.sources import txn_table as tt
 
 
 def _mk(spark, lo, hi, price=1.0):
@@ -73,12 +73,40 @@ def test_merge_rewrites_only_intersecting_files(table, spark):
     assert any(a["stats"]["k"]["max"] == 99 for a in snap["files"].values())
 
 
-def test_merge_via_delta_io_routing(table, spark):
-    updates = spark.createDataFrame([Row(k=0, price=7.0, seg="u")])
-    delta_io.upsert(spark, table, updates, keys=["k"])
-    df = tt.read(spark, table)
-    assert df.count() == 200
-    assert df.filter("k = 0").select("price").collect()[0][0] == 7.0
+def test_merge_keyed_on_date_column(tmp_path, spark):
+    """Footer stats hold DATE bounds as ISO strings; the merges'
+    collected date bounds must compare against them (and still
+    prune the file whose date range is disjoint)."""
+    import datetime
+
+    day = lambda i: datetime.date(2024, 1, 1) + datetime.timedelta(days=i)  # noqa: E731
+
+    def two_files(root):
+        for lo in (0, 100):
+            tt.write(spark.createDataFrame(
+                [(day(i), i, "Y", None) for i in range(lo, lo + 10)],
+                "d date, v long, actv_flg string, record_to timestamp",
+            ).coalesce(1), root)
+        return root
+
+    upd = spark.createDataFrame(
+        [(day(3), -3, "Y", None), (day(20), -20, "Y", None)],
+        "d date, v long, actv_flg string, record_to timestamp",
+    )
+    root = two_files(str(tmp_path / "dated"))
+    res = tt.merge_upsert(spark, root, upd, keys=["d"])
+    assert res["rewritten"] == 1 and res["untouched"] == 1
+    got = {r.d: r.v for r in tt.read(spark, root).collect()}
+    assert len(got) == 21 and got[day(3)] == -3 and got[day(20)] == -20
+
+    dim = two_files(str(tmp_path / "dated_dim"))
+    res = tt.scd2_merge_txn(
+        spark, dim, spark.createDataFrame([(day(105), 5)], "d date, v long"),
+        keys=["d"], close_ts=F.lit("2024-06-01 00:00:00").cast("timestamp"),
+    )
+    assert res["rewritten"] == 1 and res["untouched"] == 1
+    closed = tt.read(spark, dim).filter("actv_flg = 'N'").collect()
+    assert [(r.d, r.v) for r in closed] == [(day(105), 105)]
 
 
 def test_delete_where_with_prune(table, spark):
